@@ -1,6 +1,7 @@
 """Benchmark harness: runs the headline queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` with the ``session.get_spark`` defaults
+users get (no bench-only overrides) and prints ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...},
      "reps": 3, "sf": ...}
@@ -216,11 +217,7 @@ def main() -> None:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = -1.0  # unknown scale marker for non-sfN directory names
-    # Shuffle-partition count sized to the benchmark SF (≤ ~600 K-row
-    # facts): fewer, fuller partitions cut fixed per-task overhead
-    # ~12% here; AQE still re-splits any stage that outgrows them.
-    # At cluster scale the same knob scales with input size.
-    spark = get_spark("bench", shuffle_partitions=16)
+    spark = get_spark("bench")
 
     names = [n for n in HEADLINE if n in QUERIES]
     # Optional subset sweep (e.g. the dedup/ANN slots on a zipf-skewed

@@ -2,8 +2,15 @@
 
 Local testing runs ``local[N]`` in one JVM; the same config block is
 what we'd ship to a 1000-executor cluster (AQE, Arrow, adaptive skew
-handling are cluster-relevant — shuffle-partition count is the only
-knob that differs, and AQE coalescing makes even that forgiving).
+handling are cluster-relevant).
+
+Parallelism policy: AQE coalesces every shuffle stage at run time,
+cached (``persist()``ed) plans included, so the partition count a
+query ends up with follows its data; it merges partitions down to the
+session's cores, not below them. The initial shuffle width, which AQE
+coalesces down from, is the local session's scheduling width: its
+cores (``sc.defaultParallelism``). A cluster deploy passes
+``shuffle_partitions`` to set its own width.
 """
 
 from __future__ import annotations
@@ -11,6 +18,25 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Share of physical memory the local JVM heap may take by default; the
+# rest stays for the JVM's off-heap use, the Python workers and the OS.
+_DRIVER_HEAP_FRACTION = 0.6
+_DRIVER_HEAP_MAX_MB = 24 * 1024
+# Initial shuffle width on a non-local master that passes none.
+_CLUSTER_SHUFFLE_PARTITIONS = 32
+
+
+def driver_memory(phys_bytes: int | None = None) -> str:
+    """Heap of the local JVM: ``$SPARK_GRAFT_DRIVER_MEM`` when set, else
+    a fixed share of physical memory, never above 24g."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mb = int(phys_bytes * _DRIVER_HEAP_FRACTION) >> 20
+    return f"{min(mb, _DRIVER_HEAP_MAX_MB)}m"
 
 
 def get_spark(
@@ -22,33 +48,42 @@ def get_spark(
     """Build (or fetch) a SparkSession with engine defaults.
 
     Defaults honor the driver environment: ``SPARK_GRAFT_CPUS`` sets
-    local parallelism, falling back to all cores.
+    local parallelism, falling back to all cores, and
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides the heap (``driver_memory``).
+    The initial shuffle width is ``shuffle_partitions`` when given, else
+    the started context's ``defaultParallelism`` on a local master and
+    ``_CLUSTER_SHUFFLE_PARTITIONS`` on any other; a
+    ``spark.sql.shuffle.partitions`` key in ``extra_conf`` wins over both.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 4)
-
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(master or f"local[{cpus}]")
         .appName(app_name)
         # Heap for the single local JVM (driver + all executor threads
-        # in local mode). The 1g Spark default OOMs past sf~0.5 with 32
-        # concurrent tasks; on a cluster this maps to executor memory
-        # and is set by the deploy, not here. Only effective for the
-        # session that launches the JVM — later getOrCreate calls
-        # ignore it, which is the desired no-op.
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
-        )
+        # in local mode). The 1g Spark default OOMs past sf~0.5; a heap
+        # past physical memory gets the process OOM-killed instead of a
+        # Spark error. On a cluster this maps to executor memory and is
+        # set by the deploy, not here. Only effective for the session
+        # that launches the JVM — later getOrCreate calls ignore it,
+        # which is the desired no-op.
+        .config("spark.driver.memory", driver_memory())
         # AQE: runtime shuffle-partition coalescing, skew-join splitting,
         # and dynamic broadcast conversion — essential at 100 TB where
         # static partition counts are always wrong for some stage.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # ...and for persisted plans too: Spark leaves a cached plan's
+        # output partitioning alone by default, so every scan of a
+        # cached frame would run the full initial shuffle width.
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        )
+        # Coalesce to fill the cores, not below them: at the 1MB default
+        # floor a small shuffle merges into one or two partitions, and a
+        # CPU-heavy consumer of it (embedding, k-means over a cached
+        # frame) then runs on one or two cores.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64KB")
         # Arrow for any pandas-UDF path and createDataFrame/ toPandas.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Deterministic timestamps across the DuckDB oracle boundary.
@@ -58,7 +93,16 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sc = spark.sparkContext
+    if "spark.sql.shuffle.partitions" not in (extra_conf or {}):
+        # A cluster context's defaultParallelism counts only the
+        # executors registered so far, which can be none yet.
+        local = sc.master.startswith("local")
+        width = shuffle_partitions or (
+            sc.defaultParallelism if local else _CLUSTER_SHUFFLE_PARTITIONS
+        )
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    sc.setLogLevel("WARN")
     return spark
 
 

@@ -43,7 +43,9 @@ def main() -> int:
         os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r14"),
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("capture-plans")
+    # plan text embeds the shuffle width, which by default follows the
+    # host's cores: take the dumps at one fixed width on every host
+    spark = get_spark("capture-plans", shuffle_partitions=32)
     for name in names:
         ids0 = persistent_rdd_ids(spark)
         # unwrap scoped queries (same as explain_digest): the scoped

@@ -99,7 +99,9 @@ def main() -> None:
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "EXPLAINS.md",
     )
-    spark = get_spark("explain-digest")
+    # plan text embeds the shuffle width, which by default follows the
+    # host's cores: take the digests at one fixed width on every host
+    spark = get_spark("explain-digest", shuffle_partitions=32)
     # scan-metadata blobs (DataFilters/PushedFilters/...) truncate at
     # maxMetadataStringLength (default 100) — and the truncation point
     # depends on EXPRESSION-ID WIDTH, which grows with session age, so
